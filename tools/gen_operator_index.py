@@ -70,6 +70,30 @@ def main() -> None:
         "Gates: `tests/test_filtered_two_phase.py::"
         "test_pre_nprobe_escalation`, `::test_stale_stats_escalation_"
         "pessimism`; frontier: `emb_pre_escalation_frontier`.",
+        "- **Serving-path job budget:** a warm two-phase "
+        "`api.run_batch` builds its plan with zero Spark jobs and "
+        "`.collect()` runs 11 jobs for an unfiltered or POST batch and "
+        "13 for a PRE batch (perfbench serving shape: 10k rows, 8 "
+        "queries). Four rules keep it there: the query batch is an "
+        "Arrow-built local relation (a list-built one is an RDD whose "
+        "every collect or broadcast is a job of Python tasks; a "
+        "fallback logs a warning); generation dirs (`current_v*`, "
+        "`index_stable_g*`, `index_fold_g*`, `tag_dict_g*`) read with a"
+        " schema cached by dir name and the changelog with the schema "
+        "`ingest` records in the manifest, so no read infers one; one "
+        "visible view per call supplies the rerank vectors AND the "
+        "result tags, and the delta branch derives from that view's own"
+        " changelog read (exchange reuse treats two reads of one dir as"
+        " equal even when their listings differ); a top-k window whose "
+        "k is within `spark.sql.optimizer.windowGroupLimitThreshold`, "
+        "or whose input is candidate-bounded, gets no Python partial "
+        "top-k: Spark plans a JVM `WindowGroupLimit` partial for such "
+        "a k, and a bounded input needs none. "
+        "Gates: "
+        "`tests/test_api.py::test_two_phase_plan_and_collect_job_budget`,"
+        " `::test_run_batch_no_duplicate_rows_under_concurrent_ingest`;"
+        " `tools/plan_audit.py` soft-flags a `Scan ExistingRDD` under a"
+        " `BroadcastExchange`.",
         "",
     ]
     order = list(reg)

@@ -14,7 +14,12 @@ every BNLJ is the deliberate broadcast-cross of a BOUNDED side (query
 batch ≤100, centroid/plane/param sets) against the collection, which is
 the correct scoring shape; audited here so a new unbounded one stands
 out in review (verified 2024-round-2: all BNLJs build on a bounded
-broadcast side).
+broadcast side). Also soft: a `Scan ExistingRDD` under a
+`BroadcastExchange` — a broadcast side built from a Python list
+(`createDataFrame(list)`) is an RDD behind a pickling map, so
+broadcasting it costs a Spark job of Python tasks per use; a side built
+through Arrow (pandas) is a LocalTableScan the driver broadcasts with no
+job.
 
 Prints one JSON line per query: {"query", "flags", "soft", "exchanges"}.
 
@@ -32,6 +37,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HARD = ("CartesianProduct", "BatchEvalPython")
 SOFT = ("BroadcastNestedLoopJoin",)  # bounded broadcast-cross — reviewed
+RDD_UNDER_BROADCAST = "ExistingRDD under BroadcastExchange"
+
+
+def broadcasts_rdd_scan(plan: str) -> bool:
+    """Whether a `Scan ExistingRDD` node sits below a
+    `BroadcastExchange` in an explain() tree (nesting by indentation)."""
+    stack: list[tuple[int, bool]] = []  # (indent, is broadcast) of ancestors
+    for line in plan.splitlines():
+        body = line.lstrip(" :+-")
+        if not body:
+            continue
+        indent = len(line) - len(body)
+        while stack and stack[-1][0] >= indent:
+            stack.pop()
+        if body.startswith("Scan ExistingRDD") and any(bc for _, bc in stack):
+            return True
+        stack.append((indent, body.startswith("BroadcastExchange")))
+    return False
 
 
 def main() -> int:
@@ -62,6 +85,8 @@ def main() -> int:
             plan = explain_str(df, "simple")
             flags = [m for m in HARD if m in plan]
             soft = [m for m in SOFT if m in plan]
+            if broadcasts_rdd_scan(plan):
+                soft.append(RDD_UNDER_BROADCAST)
             n_exchanges = count_exchanges(df)
         except Exception as e:  # surface, don't die — audit the rest
             print(json.dumps({"query": name, "flags": [f"error:{e}"]}))

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import threading
 import time
 from contextlib import contextmanager
@@ -37,6 +38,29 @@ from write_optimized_vector_database_spark.operators.filters import apply_query_
 from write_optimized_vector_database_spark.operators.topk import exact_topk
 
 CHANGELOG_SCHEMA_COLS = ["op", "id", "tenant", "namespace", "vector", "tags", "epoch"]
+
+# Generation dirs are written once and published by a manifest/pointer
+# swap, never modified after: their parquet schema is a per-dir constant.
+# Reads pin it (VectorCollection._read_dir) so only the first read of a
+# generation pays Spark's 1-task schema-inference job.
+_IMMUTABLE_DIR = re.compile(r"(current_v|index_stable_g|index_fold_g|tag_dict_g)\d+")
+
+
+def _changelog_schema_union(
+    recorded: T.StructType | None, written: T.StructType
+) -> T.StructType:
+    """Union of the columns written to the changelog, in canonical
+    column order (unknown columns last, in first-seen order). A column's
+    first recorded type wins; every field is nullable, as a parquet read
+    makes it anyway."""
+    fields: dict[str, T.StructField] = {}
+    for f in list(recorded.fields if recorded else []) + list(written.fields):
+        fields.setdefault(f.name, T.StructField(f.name, f.dataType, True))
+    order = {c: i for i, c in enumerate(CHANGELOG_SCHEMA_COLS + ["id_hash"])}
+    return T.StructType(
+        sorted(fields.values(), key=lambda f: order.get(f.name, len(order)))
+    )
+
 
 # Test hook mirroring the reference's fault-injection kill points
 # (scripts/fault-inject.sh:9, `compaction_merge`): set to a callable that
@@ -172,6 +196,9 @@ class VectorCollection:
         # so only the cache dict itself needs guarding).
         self._artifact_cache: dict = {}
         self._artifact_cache_lock = threading.Lock()
+        # generation dir path → its parquet schema (see _read_dir); GC
+        # drops the entry of every dir it removes
+        self._schema_cache: dict[str, T.StructType] = {}
 
     # -- write path ---------------------------------------------------------
 
@@ -323,7 +350,7 @@ class VectorCollection:
         p = f"{self.path}/{sub}" if sub else f"{self.path}/tag_dict"
         if not self.fs.isdir(p):
             return None
-        return self.spark.read.parquet(p)
+        return self._read_dir(p)
 
     def _encode_string_tags(self, batch: DataFrame) -> DataFrame:
         """String-tag ingest edge: extend the persisted dictionary with
@@ -405,6 +432,7 @@ class VectorCollection:
                 continue
             if name == "tag_dict" or name.startswith("tag_dict_g"):
                 self.fs.rmtree(d)
+                self._forget_schemas([name])
 
     def ingest(self, batch: DataFrame, dedup: bool = True) -> int:
         """Append a batch of ops to the changelog.
@@ -433,6 +461,12 @@ class VectorCollection:
         if dedup:
             out = C.upsert_dedup(out)
         out = out.withColumn("id_hash", id_hash("id"))
+        # widen the recorded changelog schema BEFORE the files that need
+        # it exist (see changelog()); a batch of known columns skips the
+        # manifest write
+        rec = self._changelog_schema()
+        if rec is None or not set(out.columns) <= set(rec.names):
+            self._record_changelog_schema(out.schema)
         n = out.count()
         before = self._dir_bytes("changelog")
         self._with_bloom(out.write).mode("append").parquet(f"{self.path}/changelog")
@@ -511,8 +545,67 @@ class VectorCollection:
             for f in self.fs.walk_files(f"{self.path}/changelog")
         )
 
-    def changelog(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.path}/changelog")
+    def _read_dir(self, path: str) -> DataFrame:
+        """`spark.read.parquet(path)`, with the schema pinned for an
+        immutable generation dir (`_IMMUTABLE_DIR`): the first read
+        infers it, every later read of that dir starts no job."""
+        if not _IMMUTABLE_DIR.fullmatch(path.rstrip("/").rsplit("/", 1)[-1]):
+            return self.spark.read.parquet(path)
+        schema = self._schema_cache.get(path)
+        if schema is None:
+            df = self.spark.read.parquet(path)
+            self._schema_cache[path] = df.schema
+            return df
+        return self.spark.read.schema(schema).parquet(path)
+
+    def _forget_schemas(self, names) -> None:
+        """Drop the pinned schemas of generation dirs GC removed."""
+        for name in names:
+            self._schema_cache.pop(f"{self.path}/{name}", None)
+
+    def _changelog_schema(self, meta: dict | None = None) -> T.StructType | None:
+        """The changelog's schema: the union of the columns `ingest`
+        has written, recorded in the manifest. A changelog whose files
+        differ in columns (a first batch without tags, a later one with
+        them) otherwise reads with whichever footer Spark samples and
+        drops the other files' columns. A collection written before the
+        schema was recorded infers it once, over every footer, and
+        records it."""
+        rec = (self._meta() if meta is None else meta).get("changelog_schema")
+        if rec is not None:
+            return T.StructType.fromJson(rec)
+        if not self._has_changelog_files():
+            return None
+        inferred = (
+            self.spark.read.option("mergeSchema", "true")
+            .parquet(f"{self.path}/changelog")
+            .schema
+        )
+        return self._record_changelog_schema(inferred)
+
+    def _record_changelog_schema(self, written: T.StructType) -> T.StructType:
+        out: dict = {}
+
+        def _union(m: dict) -> None:
+            rec = m.get("changelog_schema")
+            merged = _changelog_schema_union(
+                T.StructType.fromJson(rec) if rec is not None else None, written
+            )
+            m["changelog_schema"] = merged.jsonValue()
+            out["schema"] = merged
+
+        self._meta_mutate(_union)
+        return out["schema"]
+
+    def changelog(self, meta: dict | None = None) -> DataFrame:
+        """The changelog, read with the schema recorded in `meta` (a
+        query's one manifest snapshot). `ingest` records a wider schema
+        before it writes the files that need it, so only a column first
+        written between that snapshot and this read's file listing is
+        missing from the read; the next query has it."""
+        schema = self._changelog_schema(meta)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(f"{self.path}/changelog")
 
     def _current_dir(self) -> str | None:
         """Resolve the live snapshot dir through the `_CURRENT` pointer
@@ -522,11 +615,14 @@ class VectorCollection:
             return None
         return f"{self.path}/{self.fs.read_text(ptr).strip()}"
 
-    def _snapshot_epoch(self) -> int:
+    def _snapshot_epoch(self, d: str | None = None) -> int:
         """The snapshot's high-water epoch, read from the marker INSIDE
         the snapshot dir — it becomes visible atomically with the pointer
-        swap, so a crash can never leave epoch and data disagreeing."""
-        d = self._current_dir()
+        swap, so a crash can never leave epoch and data disagreeing.
+        Pass the dir a caller already resolved so epoch and data come
+        from one `_CURRENT` read even while a compact swaps it."""
+        if d is None:
+            d = self._current_dir()
         if d is None:
             return -1
         marker = f"{d}/_SNAPSHOT_META.json"
@@ -545,16 +641,27 @@ class VectorCollection:
         window over the snapshot would block pushdown and cost a full
         shuffle of the table at every read. Tail epochs are strictly
         greater than snapshot epochs, so tail-latest always wins."""
-        snap_epoch = self._snapshot_epoch()
+        return self._visible()[0]
+
+    def _visible(self, meta: dict | None = None) -> tuple[DataFrame, DataFrame | None]:
+        """(current() view, the changelog read it was built from, or
+        None when there is no changelog). A plan that reads the tail
+        next to the view must derive from THIS read: Spark's exchange
+        reuse takes two reads of one dir for equal even when their file
+        listings differ, so a second read lets one plan mix two
+        listings — under a concurrent ingest, a view that keeps a
+        snapshot row AND the tail row that supersedes it."""
+        snap_dir = self._current_dir()
+        snap_epoch = self._snapshot_epoch(snap_dir)
         if not self._has_changelog_files():
             if snap_epoch < 0:
                 raise ValueError(f"collection at {self.path} is empty")
-            return self.spark.read.parquet(self._current_dir())
-        tail = self.changelog()
+            return self._read_dir(snap_dir), None
+        log = self.changelog(meta)
         if snap_epoch < 0:
-            return C.visible(tail)
-        snapshot = self.spark.read.parquet(self._current_dir())
-        tail = tail.filter(F.col("epoch") > snap_epoch)
+            return C.visible(log), log
+        snapshot = self._read_dir(snap_dir)
+        tail = log.filter(F.col("epoch") > snap_epoch)
         tail_latest = C.latest_by_id(tail)
         # the anti-join needs only the tail's id SET (fences excluded,
         # same as latest_by_id's up-front drop — a FENCE can share a
@@ -570,10 +677,11 @@ class VectorCollection:
             "id",
             "left_anti",
         )
-        return survivors.unionByName(
+        view = survivors.unionByName(
             tail_latest.filter(F.col("op") != "DELETE"),
             allowMissingColumns=True,
         ).select(*snapshot.columns)
+        return view, log
 
     def visible_as_of(self, as_of_epoch: int) -> DataFrame:
         """MVCC time-travel read: the visible view as of `as_of_epoch`.
@@ -595,9 +703,10 @@ class VectorCollection:
         boundary, not every intermediate op — the same collapse the
         reference's message-buffer dedup applies (msg-buf.h:134-147).
         """
-        snap_epoch = self._snapshot_epoch()
+        snap_dir = self._current_dir()
+        snap_epoch = self._snapshot_epoch(snap_dir)
         if as_of_epoch >= snap_epoch >= 0:
-            snapshot = self.spark.read.parquet(self._current_dir())
+            snapshot = self._read_dir(snap_dir)
             if not self._has_changelog_files():
                 return snapshot
             tail = self.changelog().filter(
@@ -715,7 +824,7 @@ class VectorCollection:
         # refresh planner stats off the snapshot just written — the CBO
         # analogue of ANALYZE TABLE after a rewrite (column-pruned
         # re-read: the vector column never loads)
-        self.analyze(self.spark.read.parquet(new_dir))
+        self.analyze(self._read_dir(new_dir))
         # GC superseded snapshot versions past retention, plus crashed
         # half-written ones (never pointed to, so never in the history)
         self._gc_snapshot_versions()
@@ -744,7 +853,12 @@ class VectorCollection:
         cur = self._current_dir()
         keep = {cur.rsplit("/", 1)[-1]} if cur else set()
         keep |= {h["dir"] for h in meta.get("snapshot_gen_history", [])}
-        return self.fs.cleanup_dirs(self.path, "current_", keep=keep)
+        removed = self.fs.cleanup_dirs(self.path, "current_", keep=keep)
+        names = [p.rsplit("/", 1)[-1] for p in list(self._schema_cache)]
+        self._forget_schemas(
+            n for n in names if n.startswith("current_") and n not in keep
+        )
+        return removed
 
     def vacuum(self, retain_for_index: bool = True) -> int:
         """Retention: delete changelog files fully covered by the current
@@ -1609,7 +1723,7 @@ class VectorCollection:
         hash-set InSet predicates)."""
         if meta is None:
             meta = self._meta()
-        base = self.spark.read.parquet(self._stable_index_path(meta))
+        base = self._read_dir(self._stable_index_path(meta))
         ov: dict = meta.get("index_fold_overrides") or {}
         if not ov:
             return base
@@ -1624,7 +1738,7 @@ class VectorCollection:
                 by_dir.setdefault(sub, []).append(int(cid))
         for sub in sorted(by_dir):
             parts.append(
-                self.spark.read.parquet(f"{self.path}/{sub}")
+                self._read_dir(f"{self.path}/{sub}")
                 .filter(F.col("centroid_id").isin(by_dir[sub]))
                 .select(*cols)
             )
@@ -1710,6 +1824,7 @@ class VectorCollection:
                 name == p or name.startswith(p + "_g") for p in prefixes
             ):
                 self.fs.rmtree(d)
+                self._forget_schemas([name])
 
     @staticmethod
     def _unpersist_entry(entry) -> None:
@@ -2320,6 +2435,7 @@ class VectorCollection:
         filter_strategy: str = "auto",
         escalate_nprobe: bool | None = None,
         escalate_rerank: bool = True,
+        _view: tuple[DataFrame, DataFrame | None] | None = None,
     ) -> DataFrame:
         """The reference's full read path (SURVEY §3.2) over both
         generations:
@@ -2348,7 +2464,13 @@ class VectorCollection:
         Either way the delta scan is filter-pushed and the exact rerank
         joins the FILTERED visible view, so every returned row satisfies
         the filters exactly; the strategy only changes candidate
-        generation cost/recall, never the filter contract."""
+        generation cost/recall, never the filter contract.
+
+        Returns (query_id, vec_id, score, rank, tags): the tags come
+        from the same visible view the rerank read the vectors from.
+        `_view` is that view and its changelog read (`_visible()`) when
+        the caller already resolved them (api.run_batch resolves one for
+        all of a batch's plans)."""
         from write_optimized_vector_database_spark.operators.filters import (
             apply_query_filters,
         )
@@ -2356,6 +2478,7 @@ class VectorCollection:
         from write_optimized_vector_database_spark.operators.pq import pq_adc_topk
         from write_optimized_vector_database_spark.operators.topk import (
             exact_topk,
+            jvm_partial_topk,
             score_column,
             topk_per_group,
         )
@@ -2400,7 +2523,7 @@ class VectorCollection:
         # delta branch, and the exact rerank all read THIS view, so the
         # _CURRENT pointer and the tag dictionary are bound exactly once
         # per query — the same discipline as the manifest snapshot above
-        cur_view = self.current()
+        cur_view, log = self._visible(meta) if _view is None else _view
         q_tag_dict = self._tag_dict_for(tags_any, meta)
         # probe-support prune set, threaded to the ADC call so the cached
         # driver-side centroid rows can honor the same filter
@@ -2599,10 +2722,9 @@ class VectorCollection:
         # way, and snapshot-side rows are excluded by the epoch bound.
         snap_epoch = self._snapshot_epoch()
         if idx_epoch >= snap_epoch:
-            if self._has_changelog_files():
-                post_tail = self.changelog().filter(
-                    F.col("epoch") > idx_epoch
-                )
+            if log is not None:
+                # the view's own changelog read (see _visible)
+                post_tail = log.filter(F.col("epoch") > idx_epoch)
                 delta_base = C.visible(post_tail)
                 cols = [
                     c for c in cur_view.columns if c in delta_base.columns
@@ -2625,6 +2747,7 @@ class VectorCollection:
         delta_cand = exact_topk(
             delta_vis, queries, k=budget, metric=self.metric,
             vec_id_col="id", vec_col="vector",
+            prune_partitions=not jvm_partial_topk(spark, budget),
         ).select("query_id", F.col("vec_id").alias("id"))
 
         cand = stable_cand.unionByName(delta_cand)
@@ -2639,7 +2762,17 @@ class VectorCollection:
         # post-aggregation size estimates are wrong, hint explicitly).
         # At 100 TB that shuffle is the whole table; at bench scale it
         # was an extra exchange + two sorts per search call.
-        full = full_current.select("id", F.col("vector").alias("__vec"))
+        # The result's tags ride along from the same rows: a second
+        # visible-view resolution for them could disagree with this one
+        # under a concurrent ingest.
+        tags = (
+            F.col("tags")
+            if "tags" in full_current.columns
+            else F.lit(None).cast("array<int>")
+        )
+        full = full_current.select(
+            "id", F.col("vector").alias("__vec"), tags.alias("tags")
+        )
         rescored = (
             full.join(F.broadcast(cand), "id")
             .join(F.broadcast(queries), "query_id")
@@ -2647,11 +2780,14 @@ class VectorCollection:
                 "query_id",
                 F.col("id").alias("vec_id"),
                 score_column(self.metric, "query_vec", "__vec").alias("score"),
+                "tags",
             )
         )
+        # candidate-bounded input: no map-side Python prune
         return topk_per_group(
-            rescored, group_cols=["query_id"], score_col="score", id_col="vec_id", k=k
-        ).select("query_id", "vec_id", "score", "rank")
+            rescored, group_cols=["query_id"], score_col="score", id_col="vec_id",
+            k=k, prune_partitions=False, carry_cols=("tags",),
+        ).select("query_id", "vec_id", "score", "rank", "tags")
 
     def topk_ivf(
         self,
@@ -2662,6 +2798,7 @@ class VectorCollection:
         namespace: str | None = None,
         tags_any: list[int | str] | None = None,
         sample_p: float | None = None,
+        _view: tuple[DataFrame, DataFrame | None] | None = None,
     ) -> DataFrame:
         """ANN read path over the materialized IVF index (probe join →
         partition pruning → score → top-k). Requires build_ivf_index().
@@ -2687,7 +2824,8 @@ class VectorCollection:
         allowed = None
         if any(x is not None for x in (tenant, namespace, tags_any, sample_p)):
             allowed = apply_query_filters(
-                self.current(), tenant, namespace, tags_any, sample_p,
+                self.current() if _view is None else _view[0],
+                tenant, namespace, tags_any, sample_p,
                 tag_dict=self._tag_dict_for(tags_any, meta),
             ).select("id")
             # probe-support prune (round 9, symmetric with topk_two_phase):
@@ -3317,6 +3455,7 @@ class VectorCollection:
         tags_any: list[int | str] | None = None,
         sample_p: float | None = None,
         strategy: str = "auto",
+        _view: tuple[DataFrame, DataFrame | None] | None = None,
     ) -> DataFrame:
         """Filtered ANN with planner-chosen filtering side (see
         plan_filtered_strategy). `strategy` ∈ {auto, pre, post}.
@@ -3339,7 +3478,7 @@ class VectorCollection:
         if strategy == "pre":
             return self.topk_ivf(
                 queries, k=k, nprobe=nprobe, tenant=tenant, namespace=namespace,
-                tags_any=tags_any, sample_p=sample_p,
+                tags_any=tags_any, sample_p=sample_p, _view=_view,
             )
         if strategy != "post":
             raise ValueError(f"unknown strategy {strategy!r}")
@@ -3359,7 +3498,8 @@ class VectorCollection:
             vec_id_col="id", vec_col="vector",
         )
         allowed = apply_query_filters(
-            self.current(), tenant, namespace, tags_any, sample_p,
+            self.current() if _view is None else _view[0],
+            tenant, namespace, tags_any, sample_p,
             tag_dict=self._tag_dict_for(tags_any, meta),
         ).select("id")
         kept = over.select(
@@ -3723,13 +3863,16 @@ class VectorCollection:
         namespace: str | None = None,
         tags_any: list[int | str] | None = None,
         sample_p: float | None = None,
+        _view: tuple[DataFrame, DataFrame | None] | None = None,
     ) -> DataFrame:
         """Filtered exact top-k over the visible view (QueryRequest
         semantics, types.h:67-82). Filters are applied before scoring so
         Catalyst pushes them into the snapshot scan. String tags_any
-        translate through the collection's tag dictionary."""
+        translate through the collection's tag dictionary. `_view` is
+        `_visible()` when the caller already resolved it."""
         base = apply_query_filters(
-            self.current(), tenant, namespace, tags_any, sample_p,
+            self.current() if _view is None else _view[0],
+            tenant, namespace, tags_any, sample_p,
             tag_dict=self._tag_dict_for(tags_any),
         )
         return exact_topk(

@@ -106,6 +106,18 @@ def _partial_topk(k: int, group_cols: list[str], score_col: str, id_col: str):
     return fn
 
 
+def jvm_partial_topk(spark, k: int) -> bool:
+    """Whether Spark itself puts a map-side partial top-k (a Partial
+    `WindowGroupLimit` before the window's exchange) under a
+    `row_number() <= k` window: it does for any k up to
+    `spark.sql.optimizer.windowGroupLimitThreshold`. The Python
+    `mapInPandas` prune then only adds a Python pass per task."""
+    threshold = spark.conf.get(
+        "spark.sql.optimizer.windowGroupLimitThreshold", "1000"
+    )
+    return 0 < k <= int(threshold)
+
+
 def topk_per_group(
     scored: DataFrame,
     group_cols: list[str],
@@ -113,13 +125,15 @@ def topk_per_group(
     id_col: str,
     k: int,
     prune_partitions: bool = True,
+    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Exact top-k rows per group, ordered (score DESC, id ASC).
 
     `prune_partitions=True` inserts the map-side partial top-k; set False
-    to keep the plan fully JVM-side (tiny inputs / plan-debugging).
+    to keep the plan fully JVM-side (bounded inputs, or k within
+    `jvm_partial_topk`). `carry_cols` ride along with the kept rows.
     """
-    narrow = scored.select(*group_cols, id_col, score_col)
+    narrow = scored.select(*group_cols, id_col, score_col, *carry_cols)
     if prune_partitions:
         narrow = narrow.mapInPandas(
             _partial_topk(k, group_cols, score_col, id_col), schema=narrow.schema
